@@ -150,13 +150,7 @@ def manifest(tree_df: DataFrame) -> dict:
     has ~2 * n_leaves nodes — thousands, not billions — so driver collect is
     the correct move, exactly like the reference's tileset.json write. At
     tile counts beyond driver memory use write_manifest_sharded instead."""
-    rows = {r["tile_id"]: r.asDict() for r in tree_df.collect()}
-    children = _children_map(rows)
-    return {
-        "asset": {"version": "1.0", "generator": "py3dtilers_spark"},
-        "geometricError": rows[""]["geometric_error"] if "" in rows else LEAF_GE,
-        "root": _node_dict(rows, children, "") if "" in rows else {},
-    }
+    return manifest_from_rows({r["tile_id"]: r.asDict() for r in tree_df.collect()})
 
 
 def check_nesting(tree_df: DataFrame) -> int:
@@ -178,11 +172,6 @@ def check_nesting(tree_df: DataFrame) -> int:
         )
     )
     return bad.count()
-
-
-def write_manifest(tree_df: DataFrame, path: str) -> None:
-    with open(path, "w") as fh:
-        json.dump(manifest(tree_df), fh)
 
 
 def write_manifest_sharded(tree_df: DataFrame, out_dir: str, shard_depth: int = 2) -> dict:

@@ -1,5 +1,5 @@
 """Range-partitioned exact-rank kd splits (the exact kd path since round 5;
-``kd_tree.kd_assign(exact=True)`` delegates here).
+``kd_tree.kd_assign`` delegates here).
 
 Same semantics as the round-4 window-only path
 (``kd_tree._kd_exact_window``, retained as the parity twin) — the reference 2-D
@@ -52,7 +52,7 @@ def kd_assign_rank(
 ) -> DataFrame:
     """Exact kd ``tile_id`` assignment, root splits fully distributed.
 
-    Identical output to ``kd_tree.kd_assign(df, kd_tree_max, exact=True)``.
+    Identical output to ``kd_tree.kd_assign(df, kd_tree_max)``.
 
     Round-6 loop shape (guide section 2.4 — remove passes outright): the
     split is an EXACT median (rank <= floor(n/2)), so child cell sizes are

@@ -22,9 +22,9 @@ Scale notes: exact mode costs one hash-shuffle + in-partition sort per level
 (log2(N / kd_tree_max) levels; ~11 at 10^12 rows with max=500 it is 31 levels
 — each a single window over cells that halve in size every level, so total
 shuffled bytes per level stay constant ~= dataset size; AQE coalesces the
-tail). Scale mode (exact=False) replaces the per-row window with a
-percentile_approx median per cell + broadcast join: no in-partition sort and
-leaf sizes within the approximation error of the quantile sketch.
+tail). Scale mode (``kd_sample_walk``) replaces the per-level shuffles with
+a split tree built from a bounded sample and one map-side tree walk: leaf
+sizes are approximate within sampling error.
 """
 from __future__ import annotations
 
@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 def kd_assign(
     df: DataFrame,
     kd_tree_max: int = 500,
-    exact: bool = True,
     id_col: str = "image_id",
     x_col: str = "x",
     y_col: str = "y",
@@ -70,14 +69,12 @@ def kd_assign(
     which hash-partitions well there. Parity of both paths with the
     Python oracle is pinned by tests/test_kd_rank.py.
     """
-    if exact:
-        from .kd_rank import kd_assign_rank
+    from .kd_rank import kd_assign_rank
 
-        return kd_assign_rank(
-            df, kd_tree_max, id_col=id_col, x_col=x_col, y_col=y_col,
-            local_cap=local_cap,
-        )
-    return _kd_approx(df, kd_tree_max, x_col, y_col)
+    return kd_assign_rank(
+        df, kd_tree_max, id_col=id_col, x_col=x_col, y_col=y_col,
+        local_cap=local_cap,
+    )
 
 
 def _kd_exact_window(df, kd_tree_max, id_col, x_col, y_col, local_cap):
@@ -138,29 +135,6 @@ def _kd_exact_window(df, kd_tree_max, id_col, x_col, y_col, local_cap):
     return out
 
 
-def _kd_approx(df, kd_tree_max, x_col, y_col, sample_cap: int = 100_000):
-    """Scale path: sample-based split tree + one map-side assignment pass.
-
-    Like Spark's RangePartitioner: collect a bounded sample of centroids,
-    build the full kd split tree on the driver (medians of the sample,
-    leaf-size estimates scaled by the sampling fraction), broadcast the
-    thresholds, and assign every row with a vectorized tree walk inside an
-    Arrow-batched pandas UDF. ZERO shuffles for assignment — the only cost
-    is one scan — versus one shuffle per level for the exact path. Leaf
-    sizes are approximate within sampling error (~±3% at the default cap).
-    """
-    # three actions consume df (count, sample, assignment scan) — cache it
-    df = df.persist()
-    n_total = df.count()
-    if n_total == 0:
-        return df.withColumn("tile_id", F.lit(""))
-    walk = kd_sample_walk(
-        df.select(x_col, y_col), kd_tree_max, n_total,
-        x_col=x_col, y_col=y_col, sample_cap=sample_cap,
-    )
-    return df.withColumn("tile_id", walk(F.col(x_col), F.col(y_col)))
-
-
 def kd_sample_walk(
     df_xy: DataFrame,
     kd_tree_max: int,
@@ -170,10 +144,14 @@ def kd_sample_walk(
     sample_cap: int = 100_000,
 ):
     """Build the broadcast sample split-tree from a slim (x, y) source and
-    return a vectorized pandas UDF `walk(x, y) -> tile_id`. Splitting the
-    tree build from the assignment lets a payload-heavy table be assigned
-    map-side (column-pruned UDF input) while the sample scan reads only the
-    centroid columns from the file source."""
+    return a vectorized pandas UDF `walk(x, y) -> tile_id`.
+
+    Like Spark's RangePartitioner: medians of a bounded sample, leaf-size
+    estimates scaled by the sampling fraction, and ZERO shuffles for the
+    assignment — versus one shuffle per level for the exact path.
+    Splitting the tree build from the assignment lets a payload-heavy table
+    be assigned map-side (column-pruned UDF input) while the sample scan
+    reads only the centroid columns from the file source."""
     from pyspark.sql.types import StringType
 
     frac = min(1.0, sample_cap / max(n_total, 1))

@@ -1,5 +1,5 @@
 """Parity of the range-partitioned rank kd splits (operators/kd_rank.py —
-the `kd_assign(exact=True)` path since round 5) with the retained
+the `kd_assign` path since round 5) with the retained
 window-only twin (`kd_tree._kd_exact_window`) and the pure-Python
 reference oracle."""
 import numpy as np

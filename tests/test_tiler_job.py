@@ -3,10 +3,17 @@ lossless, caption equality — BASELINE.json input_hint) and exact resume from
 the lineage checkpoint (north rule)."""
 import json
 import os
+import re
+import shutil
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
 
 from py3dtilers_spark.functions.imaging import decode, psnr, synth_pixels
+from py3dtilers_spark.plans import tiler_job
 from py3dtilers_spark.plans.tiler_job import run_tiler
 
 
@@ -70,15 +77,33 @@ def test_payload_psnr_per_feature(spark, sf_smoke, tmp_path):
     assert n_mixed_exact > 0  # the strict check covered mixed tiles
 
 
-def test_resume_produces_identical_output(spark, sf_smoke, tmp_path):
+def _keep_first_tiles(out, k):
+    """Rewrite tiles/ and lineage/ down to the first k tile ids in path
+    order: the state a run leaves when it stops after k tiles."""
+    tiles = pq.read_table(os.path.join(out, "tiles"))
+    keep = pa.array(sorted(tiles["tile_id"].to_pylist())[:k])
+    for sub, col in (("tiles", "tile_id"), ("lineage", "cell_id")):
+        d = os.path.join(out, sub)
+        t = pq.read_table(d)
+        shutil.rmtree(d)
+        os.makedirs(d)
+        pq.write_table(
+            t.filter(pc.is_in(t[col], value_set=keep)),
+            os.path.join(d, "part-00000.parquet"),
+        )
+
+
+@pytest.mark.parametrize("exact", [True, False], ids=["exact", "scale"])
+def test_resume_produces_identical_output(spark, sf_smoke, tmp_path, exact):
     full = str(tmp_path / "full")
     part = str(tmp_path / "part")
-    run_tiler(spark, sf_smoke, full, kd_tree_max=300)
-    # crash after 3 tiles, then resume
-    run_tiler(spark, sf_smoke, part, kd_tree_max=300, fail_after_tiles=3)
+    run_tiler(spark, sf_smoke, full, kd_tree_max=300, exact=exact)
+    # a run that stopped after 3 tiles, then resume
+    run_tiler(spark, sf_smoke, part, kd_tree_max=300, exact=exact)
+    _keep_first_tiles(part, 3)
     partial = _read_tiles(spark, part)
     assert len(partial) == 3
-    run_tiler(spark, sf_smoke, part, kd_tree_max=300, resume=True)
+    run_tiler(spark, sf_smoke, part, kd_tree_max=300, exact=exact, resume=True)
     a = _read_tiles(spark, full).sort_values("tile_id").reset_index(drop=True)
     b = _read_tiles(spark, part).sort_values("tile_id").reset_index(drop=True)
     assert list(a["tile_id"]) == list(b["tile_id"])
@@ -88,6 +113,10 @@ def test_resume_produces_identical_output(spark, sf_smoke, tmp_path):
     lineage = spark.read.parquet(os.path.join(part, "lineage")).toPandas()
     assert set(lineage["cell_id"]) == set(a["tile_id"])
     assert int(lineage["row_count"].sum()) == int(a["n_features"].sum())
+    with open(os.path.join(full, "tileset.json")) as fa, open(
+        os.path.join(part, "tileset.json")
+    ) as fb:
+        assert json.load(fa) == json.load(fb)
 
 
 def test_manifest_written(spark, sf_smoke, tmp_path):
@@ -98,34 +127,17 @@ def test_manifest_written(spark, sf_smoke, tmp_path):
     assert m["root"]["geometricError"] == 500.0
 
 
-def test_pipeline_with_sharded_manifest(spark, sf_smoke, tmp_path):
-    """Full pipeline with manifest sharding on: root tileset.json is a stub
-    referencing executor-written sub/tileset_*.json files, and the resolved
-    tree equals the unsharded run's manifest byte-for-byte."""
-    from py3dtilers_spark.operators.hierarchy import read_manifest_resolved
-
-    out_a = str(tmp_path / "plain")
-    out_b = str(tmp_path / "sharded")
-    ra = run_tiler(spark, sf_smoke, out_a, with_payload=False)
-    rb = run_tiler(
-        spark, sf_smoke, out_b, with_payload=False, manifest_shard_depth=2
-    )
-    assert (ra["n_features"], ra["n_tiles"]) == (rb["n_features"], rb["n_tiles"])
-    with open(os.path.join(out_a, "tileset.json")) as fh:
-        plain = json.load(fh)
-    assert read_manifest_resolved(out_b) == plain
-    assert os.listdir(os.path.join(out_b, "sub"))
-
-
-def test_local_finish_matches_distributed_rollup(spark, sf_smoke, tmp_path):
-    """The scale path's driver-side finish (one metadata collect -> lineage
-    + tree + manifest) must emit byte-identical tileset.json structure to
-    the distributed tile_tree_from_stats + manifest() chain over the same
-    encoded tiles."""
+@pytest.mark.parametrize("exact", [True, False], ids=["exact", "scale"])
+def test_local_finish_matches_distributed_rollup(spark, sf_smoke, tmp_path, exact):
+    """The driver-side finish (one metadata read -> lineage + tree +
+    manifest) must emit byte-identical tileset.json structure to the
+    distributed tile_tree_from_stats + manifest() chain over the same
+    encoded tiles, on both kd paths."""
     from py3dtilers_spark.operators.hierarchy import manifest, tile_tree_from_stats
 
     out = str(tmp_path / "lf")
-    stats = run_tiler(spark, sf_smoke, out, kd_tree_max=300, exact=False)
+    stats = run_tiler(spark, sf_smoke, out, kd_tree_max=300, exact=exact)
+    assert stats["finish"] == "local"
     with open(os.path.join(out, "tileset.json")) as fh:
         local = json.load(fh)
 
@@ -143,26 +155,34 @@ def test_local_finish_matches_distributed_rollup(spark, sf_smoke, tmp_path):
     }
 
 
-def test_auto_shard_finish(spark, sf_smoke, tmp_path, monkeypatch):
+@pytest.mark.parametrize("with_payload", [True, False], ids=["payload", "no_payload"])
+def test_auto_shard_finish(spark, sf_smoke, tmp_path, monkeypatch, with_payload):
     """Above the tile-count threshold the pipeline auto-selects the 100x
     finish (distributed lineage + executor-sharded manifest) with no opt-in
-    flag, and its resolved manifest equals the local finish's byte-for-byte.
-    Lineage from the two finish paths must read back with identical types
-    (the pyarrow writer emits tz-aware timestamps like F.current_timestamp)."""
+    flag: the root tileset.json is a stub referencing executor-written
+    sub/tileset_*.json files, and the resolved manifest equals the local
+    finish's byte-for-byte. Lineage from the two finish paths must read
+    back with identical types (the pyarrow writer emits tz-aware
+    timestamps like F.current_timestamp)."""
     from py3dtilers_spark.operators.hierarchy import read_manifest_resolved
 
     out_a = str(tmp_path / "local")
     out_b = str(tmp_path / "auto")
-    ra = run_tiler(spark, sf_smoke, out_a, kd_tree_max=300, exact=False)
+    kw = dict(kd_tree_max=300, exact=False, with_payload=with_payload)
+    ra = run_tiler(spark, sf_smoke, out_a, **kw)
     assert ra["finish"] == "local"
-    monkeypatch.setenv("SPARK_GRAFT_AUTO_SHARD_TILES", "4")
-    rb = run_tiler(spark, sf_smoke, out_b, kd_tree_max=300, exact=False)
-    assert rb["finish"].startswith("sharded:")
+    monkeypatch.setattr(tiler_job, "AUTO_SHARD_TILES", 4)
+    rb = run_tiler(spark, sf_smoke, out_b, **kw)
+    # finish is "local" or "sharded:d<depth>", nothing else
+    assert re.fullmatch(r"sharded:d\d+", rb["finish"])
     assert (ra["n_features"], ra["n_tiles"]) == (rb["n_features"], rb["n_tiles"])
     with open(os.path.join(out_a, "tileset.json")) as fh:
         local = json.load(fh)
     assert read_manifest_resolved(out_b) == local
     assert os.listdir(os.path.join(out_b, "sub"))
+    if not with_payload:
+        assert not os.path.exists(os.path.join(out_b, "lineage"))
+        return
     la = spark.read.parquet(os.path.join(out_a, "lineage"))
     lb = spark.read.parquet(os.path.join(out_b, "lineage"))
     assert [(f.name, f.dataType) for f in la.schema.fields] == [
