@@ -23,14 +23,16 @@ Scale notes: exact mode costs one hash-shuffle + in-partition sort per level
 — each a single window over cells that halve in size every level, so total
 shuffled bytes per level stay constant ~= dataset size; AQE coalesces the
 tail). Scale mode (``kd_sample_walk``) replaces the per-level shuffles with
-a split tree built from a bounded sample and one map-side tree walk: leaf
-sizes are approximate within sampling error.
+a split tree built from a bounded sample and one map-side tree walk, a JVM
+expression over the tree's constant array literals (no broadcast, no Python
+UDF): leaf sizes are approximate within sampling error.
 """
 from __future__ import annotations
 
+import json
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -143,17 +145,18 @@ def kd_sample_walk(
     y_col: str = "y",
     sample_cap: int = 100_000,
 ):
-    """Build the broadcast sample split-tree from a slim (x, y) source and
-    return a vectorized pandas UDF `walk(x, y) -> tile_id`.
+    """Build the sample split-tree from a slim (x, y) source and return
+    `walk(x, y) -> tile_id`, a Catalyst Column expression.
 
     Like Spark's RangePartitioner: medians of a bounded sample, leaf-size
     estimates scaled by the sampling fraction, and ZERO shuffles for the
     assignment — versus one shuffle per level for the exact path.
     Splitting the tree build from the assignment lets a payload-heavy table
-    be assigned map-side (column-pruned UDF input) while the sample scan
-    reads only the centroid columns from the file source."""
-    from pyspark.sql.types import StringType
-
+    be assigned map-side while the sample scan reads only the centroid
+    columns from the file source. The walk runs in the JVM (no broadcast,
+    no Python task, no x/y Arrow round trip): the tree rides in the plan
+    as constant array literals, so the map stage is scan -> project ->
+    shuffle write."""
     frac = min(1.0, sample_cap / max(n_total, 1))
     sample = df_xy.select(x_col, y_col)
     if frac < 1.0:
@@ -162,11 +165,19 @@ def kd_sample_walk(
     sx = spts[x_col].to_numpy()
     sy = spts[y_col].to_numpy()
     scale = n_total / max(len(sx), 1)
+    return _tree_walk(_split_tree(sx, sy, kd_tree_max, scale))
 
-    # breadth-first split-tree arrays; node 0 is the root
+
+def _split_tree(sx: np.ndarray, sy: np.ndarray, kd_tree_max: int, scale: float):
+    """Median split tree of the sample points (sx, sy), where each sample
+    point stands for `scale` rows. Returns (thr, left, leaf_path) as
+    node-indexed lists with node 0 the root: an inner node at depth d goes
+    to `left[n]` when its x (d even) or y (d odd) coordinate is `< thr[n]`,
+    else to `left[n] + 1` (siblings are allocated as a pair); a leaf has
+    `left[n] == -1` and its tile id in `leaf_path[n]`."""
     thr: list[float] = [0.0]
-    leaf_path: list[str | None] = [None]
-    kids: list[tuple[int, int] | None] = [None]
+    left: list[int] = [-1]
+    leaf_path: list[str] = [""]
 
     def build(node: int, idx: np.ndarray, depth: int, path: str) -> None:
         est = len(idx) * scale
@@ -175,20 +186,18 @@ def kd_sample_walk(
             return
         vals = sx[idx] if depth % 2 == 0 else sy[idx]
         med = float(np.median(vals))
-        thr[node] = med
-        left = idx[vals < med]
-        right = idx[vals >= med]
-        if len(left) == 0 or len(right) == 0:  # all-equal axis values
+        lo = idx[vals < med]
+        hi = idx[vals >= med]
+        if len(lo) == 0 or len(hi) == 0:  # all-equal axis values
             leaf_path[node] = path or "1"
             return
-        li, ri = len(thr), len(thr) + 1
-        for _ in range(2):
-            thr.append(0.0)
-            leaf_path.append(None)
-            kids.append(None)
-        kids[node] = (li, ri)
-        build(li, left, depth + 1, path + "0")
-        build(ri, right, depth + 1, path + "1")
+        li = len(thr)
+        thr[node], left[node] = med, li
+        thr.extend((0.0, 0.0))
+        left.extend((-1, -1))
+        leaf_path.extend(("", ""))
+        build(li, lo, depth + 1, path + "0")
+        build(li + 1, hi, depth + 1, path + "1")
 
     import sys
 
@@ -198,38 +207,44 @@ def kd_sample_walk(
         build(0, np.arange(len(sx)), 0, "")
     finally:
         sys.setrecursionlimit(old_limit)
+    return thr, left, leaf_path
 
-    thr_a = np.asarray(thr)
-    left_a = np.asarray([k[0] if k else -1 for k in kids], dtype=np.int64)
-    right_a = np.asarray([k[1] if k else -1 for k in kids], dtype=np.int64)
-    depth_a = np.zeros(len(thr), dtype=np.int64)
-    stack = [(0, 0)]
-    while stack:
-        n, d = stack.pop()
-        depth_a[n] = d
-        if left_a[n] >= 0:
-            stack.append((left_a[n], d + 1))
-            stack.append((right_a[n], d + 1))
-    paths = np.asarray([p if p is not None else "" for p in leaf_path], dtype=object)
 
-    bc = df_xy.sparkSession.sparkContext.broadcast(
-        (thr_a, left_a, right_a, depth_a, paths)
-    )
+def _tree_walk(tree):
+    """`walk(x, y) -> tile_id` Column over a `_split_tree` tree: one
+    `node -> child` step per depth d, folded with `aggregate` over d; a
+    row that already reached its leaf stays there. A leaf's path length is
+    its depth, so the longest path bounds the steps (the single-node
+    tree's "1" adds one no-op step). Comparisons are `<` and a null or NaN
+    coordinate fails them, so it goes right — the same leaf as a numpy
+    walk of the tree.
 
-    @F.pandas_udf(StringType())
-    def walk(x: pd.Series, y: pd.Series) -> pd.Series:
-        t, la, ra, da, pth = bc.value
-        xs = x.to_numpy()
-        ys = y.to_numpy()
-        cur = np.zeros(len(xs), dtype=np.int64)
-        live = la[cur] >= 0
-        while live.any():
-            node = cur[live]
-            vals = np.where(da[node] % 2 == 0, xs[live], ys[live])
-            go_left = vals < t[node]
-            cur[live] = np.where(go_left, la[node], ra[node])
-            live = la[cur] >= 0
-        return pd.Series(pth[cur])
+    Each array is ONE JSON string literal parsed by `from_json`, which
+    Catalyst constant-folds once on the driver: `F.lit` of a Python list or
+    ndarray is converted by py4j one element at a time (seconds at 64k
+    nodes). Python's float repr round-trips exactly."""
+    thr, left, leaf_path = tree
+    steps = max(len(p) for p in leaf_path)
+
+    def array_lit(values: list, elem: str) -> Column:
+        return F.from_json(F.lit(json.dumps(values)), f"array<{elem}>")
+
+    thr_a = array_lit(thr, "double")
+    left_a = array_lit(left, "int")
+    path_a = array_lit(leaf_path, "string")
+
+    def walk(x: Column, y: Column) -> Column:
+        def step(node: Column, depth: Column) -> Column:
+            kid = F.get(left_a, node)
+            val = F.when(depth % 2 == 0, x).otherwise(y)
+            return (
+                F.when(kid < 0, node)
+                .when(val < F.get(thr_a, node), kid)
+                .otherwise(kid + 1)
+            )
+
+        leaf = F.aggregate(F.sequence(F.lit(0), F.lit(steps - 1)), F.lit(0), step)
+        return F.get(path_a, leaf)
 
     return walk
 

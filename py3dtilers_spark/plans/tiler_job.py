@@ -233,6 +233,32 @@ def encode_tiles_stream(tiled: DataFrame, files_dir: str | None = None) -> DataF
     return tiled.mapInPandas(gen, ENCODED_SCHEMA)
 
 
+def assign_tiles(
+    base: DataFrame,
+    rows_src: DataFrame,
+    kd_tree_max: int,
+    exact: bool,
+    n_rows: int,
+) -> DataFrame:
+    """`rows_src` with a kd-leaf `tile_id`, computed from the byte-free
+    projection `base`.
+
+    exact: kd runs on the slim projection (exact-median splits) and the
+    assignment joins back to the payload columns (parity path). Otherwise
+    the split tree is built from a slim (x, y) sample scan and `rows_src`
+    is assigned map-side by a JVM expression — no join, no Python, no
+    shuffle of anything before the single tile repartition (scale path).
+    """
+    if exact:
+        slim = kd_assign(
+            base.select("image_id", "x", "y"),
+            kd_tree_max=kd_tree_max,
+        ).localCheckpoint(eager=True)
+        return rows_src.join(slim.select("image_id", "tile_id"), "image_id")
+    walk = kd_sample_walk(base.select("x", "y"), kd_tree_max, n_rows)
+    return rows_src.withColumn("tile_id", walk(F.col("x"), F.col("y")))
+
+
 def run_tiler(
     spark: SparkSession,
     sf_dir: str,
@@ -250,7 +276,8 @@ def run_tiler(
     """Execute the pipeline; returns summary metrics (incl. per-phase secs).
 
     exact: True assigns tiles with the exact-median kd splits (parity
-    path); False with the broadcast sample split tree (scale path).
+    path); False with the sample split tree walked in the JVM (scale path;
+    see assign_tiles).
     payload_source:
       "synth"  — features carries no bytes; payload pixels are synthesized
                  post-shuffle from phash (test/sandbox mode).
@@ -277,7 +304,10 @@ def run_tiler(
     # every payload byte. Payload bytes flow through exactly one shuffle
     # (the tile repartition) and are never persisted or scanned twice — at
     # 100 TB payload bytes dominate, so this is the difference between 1x
-    # and depth-x payload generation + shuffle volume.
+    # and depth-x payload generation + shuffle volume. Python tasks run only
+    # where pixels are decoded (the encode stage): each one carries a fixed
+    # worker start-up cost (see the encode waves below), so the kd
+    # assignment before the tile shuffle stays in the JVM.
     t0 = _t()
     src = features if features is not None else features_df(spark, sf_dir, with_bytes=False)
     slim_cols = ["image_id", "x", "y", "z", "w", "h", "fmt", "caption", "phash"]
@@ -293,24 +323,14 @@ def run_tiler(
     # construction
     est_leaves = max(1, int(n_rows) // max(kd_tree_max, 1))
     # round encode tasks up to whole waves of the available slots to avoid
-    # a straggler tail
+    # a straggler tail, and launch no more waves than the data needs: every
+    # Python task pays a fixed worker start-up (measured 130-245 ms per task
+    # on a 4-vCPU host, in pyspark's importlib.invalidate_caches()), so a
+    # forced second wave of small tasks costs more than its balance gains
     par = spark.sparkContext.defaultParallelism
-    waves = max(2, -(-(n_rows // ROWS_PER_TASK + 1) // par))
+    waves = max(1, -(-(n_rows // ROWS_PER_TASK + 1) // par))
     n_parts = waves * par
-    if exact:
-        # parity path: kd runs on the slim projection (window sorts), the
-        # assignment joins back to the payload columns
-        slim = kd_assign(
-            base.select("image_id", "x", "y"),
-            kd_tree_max=kd_tree_max,
-        ).localCheckpoint(eager=True)
-        assigned = rows_src.join(slim.select("image_id", "tile_id"), "image_id")
-    else:
-        # scale path: build the split tree from a slim (x, y) sample scan,
-        # then assign map-side — NO join, NO shuffle of anything before the
-        # single tile repartition
-        walk = kd_sample_walk(base.select("x", "y"), kd_tree_max, n_rows)
-        assigned = rows_src.withColumn("tile_id", walk(F.col("x"), F.col("y")))
+    assigned = assign_tiles(base, rows_src, kd_tree_max, exact, n_rows)
     timings["kd"] = _t() - t0
 
     tiles_dir = os.path.join(out_dir, "tiles")

@@ -73,9 +73,9 @@ def ifc_cartesian_points(entities: DataFrame) -> DataFrame:
     )
     return pts.select(
         "entity_id",
-        F.element_at("c", 1).cast("double").alias("x"),
-        F.element_at("c", 2).cast("double").alias("y"),
-        F.coalesce(F.try_element_at("c", F.lit(3)).cast("double"), F.lit(0.0)).alias("z"),
+        F.try_element_at("c", F.lit(1)).try_cast("double").alias("x"),
+        F.try_element_at("c", F.lit(2)).try_cast("double").alias("y"),
+        F.coalesce(F.try_element_at("c", F.lit(3)).try_cast("double"), F.lit(0.0)).alias("z"),
     )
 
 
@@ -415,22 +415,25 @@ def ifc_sds_meshes(entities: DataFrame, segments: int = 16) -> DataFrame:
 
     sds = entities.where(F.col("ifc_class") == "IFCSWEPTDISKSOLID").select(
         F.col("entity_id").alias("solid_id"),
-        F.regexp_extract("args", r"^#(\d+)", 1).cast("bigint").alias("curve_id"),
+        # a missing or malformed argument extracts as '' and ANSI cast
+        # throws on it — try_cast -> null (a null curve_id drops the solid
+        # at the directrix join)
+        F.regexp_extract("args", r"^#(\d+)", 1).try_cast("bigint").alias("curve_id"),
         F.regexp_extract("args", r"#\d+\s*,\s*([0-9][0-9.Ee+\-]*)", 1)
-        .cast("double")
+        .try_cast("double")
         .alias("radius"),
         # InnerRadius when numeric; '$' leaves the extract empty -> null
         F.regexp_extract(
             "args", r"#\d+\s*,\s*[0-9][0-9.Ee+\-]*\s*,\s*([0-9][0-9.Ee+\-]*)", 1
         )
-        .cast("double")
+        .try_cast("double")
         .alias("inner_radius"),
         # StartParam / EndParam (4th/5th args): a NUMERIC value means a
         # TRIMMED sweep, which this subset does not evaluate — such solids
         # are dropped below (consistent with the subset policy of omitting
         # unsupported forms) instead of silently emitting the full tube
-        F.trim(F.element_at(F.split("args", ","), 4)).alias("_p_start"),
-        F.trim(F.element_at(F.split("args", ","), 5)).alias("_p_end"),
+        F.trim(F.try_element_at(F.split("args", ","), F.lit(4))).alias("_p_start"),
+        F.trim(F.try_element_at(F.split("args", ","), F.lit(5))).alias("_p_end"),
     ).where(
         (F.col("_p_start").isNull() | ~F.col("_p_start").rlike(r"^[0-9.+\-]"))
         & (F.col("_p_end").isNull() | ~F.col("_p_end").rlike(r"^[0-9.+\-]"))

@@ -893,3 +893,36 @@ def test_ifc_swept_disk_trimmed_is_dropped(spark, tmp_path):
     p2 = tmp_path / "sds_full.ifc"
     p2.write_text(IFC_SDS_TEXT)
     assert ifc_sds_meshes(ifc_entities(spark, str(p2))).count() == 1
+
+
+IFC_SDS_TRUNCATED_TEXT = IFC_SDS_TEXT.replace(
+    "#59= IFCSWEPTDISKSOLID(#56,0.2,0.1,$,$);",
+    "#59= IFCSWEPTDISKSOLID(#56,0.2);",
+).replace(
+    "#56= IFCPOLYLINE(",
+    "#53= IFCCARTESIANPOINT((7.));\n#56= IFCPOLYLINE(",
+)
+
+
+def test_ifc_truncated_args_scan_under_ansi(spark, tmp_path):
+    """Entity lines with fewer arguments than the schema (a swept disk
+    solid cut after its radius, a one-coordinate point) must not crash the
+    scan under ANSI mode, where an out-of-range strict element_at and a
+    cast of an empty regexp extract throw.
+    The missing optional StartParam/EndParam/InnerRadius read as absent,
+    so the solid still evaluates as the full tube without a bore."""
+    from py3dtilers_spark.sources.ifc_io import (
+        ifc_cartesian_points, ifc_entities, ifc_sds_meshes,
+    )
+
+    p = tmp_path / "sds_trunc.ifc"
+    p.write_text(IFC_SDS_TRUNCATED_TEXT)
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        ents = ifc_entities(spark, str(p))
+        assert ifc_sds_meshes(ents).count() == 1
+        pts = {r["entity_id"]: r for r in ifc_cartesian_points(ents).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert (pts[53]["x"], pts[53]["y"], pts[53]["z"]) == (7.0, None, 0.0)

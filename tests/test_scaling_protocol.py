@@ -88,6 +88,49 @@ def test_run_clean_v3_storage_gate(tmp_path):
     assert s["n"] == 5 and s["fsync_med"] == 9.0 and s["span"] >= 0.99
 
 
+def test_run_clean_psi_unavailable_fails_closed(tmp_path, monkeypatch):
+    """An unreadable /proc/pressure is an unavailable sample, never a zero
+    stall: the PSI gate must not pass vacuously."""
+    from tools import psi_probe
+
+    monkeypatch.setattr(psi_probe, "_PSI_DIR", str(tmp_path / "no_pressure"))
+    assert psi_probe._read_psi("io") is None
+    ok = {"some": 10, "full": 5}
+    cur = {"io": None, "memory": ok, "cpu": ok}
+    prev = {"io": ok, "memory": ok, "cpu": ok}
+    assert psi_probe._sample(prev, cur, 994.0, 1000.0) == {
+        "t": 1000.0, "unavailable": True,
+    }
+    assert "unavailable" not in psi_probe._sample(prev, prev, 994.0, 1000.0)
+
+    canary = {"n": 20, "med": 70.0, "p10": 60.0, "min": 50.0, "max": 80.0,
+              "span": 0.95}
+
+    def psi_series(name, unavailable_at=()):
+        p = str(tmp_path / name)
+        with open(p, "w") as fh:
+            for i in range(10):
+                rec = ({"t": 1000.0 + i * 6.0, "unavailable": True}
+                       if i in unavailable_at else
+                       {"t": 1000.0 + i * 6.0, "io_some": 0.0, "io_full": 0.001,
+                        "mem_some": 0.0, "mem_full": 0.0, "cpu_some": 0.01})
+                fh.write(json.dumps(rec) + "\n")
+        return rc.psi_stats(p, 1000.0, 1054.0)
+
+    healthy = psi_series("healthy.jsonl")
+    assert healthy["n"] == 10 and healthy["n_unavailable"] == 0
+    assert rc.run_clean(canary, psi=healthy)
+    # one unreadable interval inside the run: enough samples remain, but
+    # the signal was missing, so the run is not clean
+    gap = psi_series("gap.jsonl", unavailable_at={4})
+    assert gap["n"] == 9 and gap["n_unavailable"] == 1
+    assert not rc.run_clean(canary, psi=gap)
+    # PSI unsupported for the whole run
+    none = psi_series("none.jsonl", unavailable_at=set(range(10)))
+    assert none["n"] == 0 and none["n_unavailable"] == 10
+    assert not rc.run_clean(canary, psi=none)
+
+
 def _chain(chain_id, clean, fp, n_est=3, cores=(1, 4), copies=3, n_rows=100,
            gate_version=rc.GATE_VERSION):
     return {

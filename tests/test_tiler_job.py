@@ -223,3 +223,20 @@ def test_file_tile_sink_fidelity(spark, sf_smoke, tmp_path):
                 assert psnr(got, want) >= 40.0
             checked += 1
     assert checked > 0
+
+
+def test_scale_path_assigns_tiles_without_python(spark, sf_smoke):
+    """Scale path: no Python runs before the tile shuffle — the kd walk is
+    a JVM expression, so the assigned frame's plan has no Python eval node
+    (Python tasks are reserved for the encode stage, where pixels are)."""
+    from py3dtilers_spark.data import features_df
+
+    base = features_df(spark, sf_smoke).select(
+        "image_id", "x", "y", "z", "w", "h", "fmt", "caption", "phash"
+    )
+    assigned = tiler_job.assign_tiles(base, base, 500, False, base.count())
+    plan = assigned._jdf.queryExecution().executedPlan().toString()
+    assert "Project" in plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "PythonUDF"):
+        assert node not in plan, plan
+    assert assigned.select("tile_id").where("tile_id IS NULL").count() == 0

@@ -19,6 +19,9 @@ over the wall interval):
   {"t": ..., "io_some": f, "io_full": f, "mem_some": f, "mem_full": f,
    "cpu_some": f}
 
+or, when a PSI file cannot be read at either end of the interval,
+{"t": ..., "unavailable": true} — the gate judges such a run not clean.
+
 Protocol note (declared with gate v4, tools/run_chain.py): the measured
 job is a FIXED function of a fixed input at a fixed parallelism, run on
 otherwise-idle guest CPUs; its own healthy stall profile is measured in
@@ -42,9 +45,12 @@ import time
 _PSI_DIR = "/proc/pressure"
 
 
-def _read_psi(res: str) -> dict[str, int]:
-    """{'some': total_us, 'full': total_us} for one resource (missing ->
-    zeros, e.g. /proc/pressure/cpu has no `full` line on older kernels)."""
+def _read_psi(res: str) -> dict[str, int] | None:
+    """{'some': total_us, 'full': total_us} for one resource; a missing
+    line reads as 0 (/proc/pressure/cpu has no `full` line on older
+    kernels). None when the file cannot be read or parsed (no PSI support,
+    /proc/pressure not mounted): zero stall would pass the gate vacuously,
+    so the caller records the sample as unavailable instead."""
     out = {"some": 0, "full": 0}
     try:
         with open(os.path.join(_PSI_DIR, res)) as fh:
@@ -55,8 +61,28 @@ def _read_psi(res: str) -> dict[str, int]:
                         if tok.startswith("total="):
                             out[parts[0]] = int(tok[6:])
     except (OSError, ValueError):
-        pass
+        return None
     return out
+
+
+def _sample(prev: dict, cur: dict, t_prev: float, t_now: float) -> dict:
+    """One record: the stall fractions over [t_prev, t_now] from the PSI
+    totals read at both ends, or an unavailable sample if any read failed."""
+    if None in prev.values() or None in cur.values():
+        return {"t": round(t_now, 2), "unavailable": True}
+    dt_us = max((t_now - t_prev) * 1e6, 1.0)
+    return {
+        "t": round(t_now, 2),
+        "io_some": round((cur["io"]["some"] - prev["io"]["some"]) / dt_us, 5),
+        "io_full": round((cur["io"]["full"] - prev["io"]["full"]) / dt_us, 5),
+        "mem_some": round(
+            (cur["memory"]["some"] - prev["memory"]["some"]) / dt_us, 5
+        ),
+        "mem_full": round(
+            (cur["memory"]["full"] - prev["memory"]["full"]) / dt_us, 5
+        ),
+        "cpu_some": round((cur["cpu"]["some"] - prev["cpu"]["some"]) / dt_us, 5),
+    }
 
 
 def main() -> None:
@@ -76,19 +102,7 @@ def main() -> None:
             break
         t_now = time.time()
         cur = {r: _read_psi(r) for r in ("io", "memory", "cpu")}
-        dt_us = max((t_now - t_prev) * 1e6, 1.0)
-        rec = {
-            "t": round(t_now, 2),
-            "io_some": round((cur["io"]["some"] - prev["io"]["some"]) / dt_us, 5),
-            "io_full": round((cur["io"]["full"] - prev["io"]["full"]) / dt_us, 5),
-            "mem_some": round(
-                (cur["memory"]["some"] - prev["memory"]["some"]) / dt_us, 5
-            ),
-            "mem_full": round(
-                (cur["memory"]["full"] - prev["memory"]["full"]) / dt_us, 5
-            ),
-            "cpu_some": round((cur["cpu"]["some"] - prev["cpu"]["some"]) / dt_us, 5),
-        }
+        rec = _sample(prev, cur, t_prev, t_now)
         prev, t_prev = cur, t_now
         os.write(fd, (json.dumps(rec) + "\n").encode())
 

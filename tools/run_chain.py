@@ -294,8 +294,10 @@ def io_stats(path: str, t0: float, t1: float) -> dict:
 
 
 def psi_stats(path: str, t0: float, t1: float) -> dict:
-    """Summarize the PSI probe series over [t0, t1] (gate v4)."""
+    """Summarize the PSI probe series over [t0, t1] (gate v4). Samples the
+    probe could not read are counted in `n_unavailable`, not in `n`."""
     io_f, mem_f, span_lo, span_hi = [], [], None, None
+    n_unavailable = 0
     try:
         with open(path) as fh:
             for line in fh:
@@ -304,6 +306,9 @@ def psi_stats(path: str, t0: float, t1: float) -> dict:
                 except json.JSONDecodeError:
                     continue
                 if not (t0 <= rec["t"] <= t1):
+                    continue
+                if rec.get("unavailable"):
+                    n_unavailable += 1
                     continue
                 io_f.append(rec["io_full"])
                 mem_f.append(rec["mem_full"])
@@ -320,6 +325,7 @@ def psi_stats(path: str, t0: float, t1: float) -> dict:
         "mem_full_mean": round(statistics.mean(mem_f), 4) if mem_f else 0.0,
         "mem_full_max": round(max(mem_f), 4) if mem_f else 0.0,
         "span": round(span, 3),
+        "n_unavailable": n_unavailable,
     }
 
 
@@ -329,7 +335,9 @@ def run_clean(
 ) -> bool:
     """Gate v4: reserved canary AND co-located CPU probe AND co-located
     storage probe AND PSI stall probe must all be clean (probes absent ->
-    judged on the rest, for direct callers that predate them)."""
+    judged on the rest, for direct callers that predate them). A single
+    unavailable PSI sample in the window makes the run not clean: the
+    signal was missing, not healthy."""
     canary_ok = (
         c["n"] >= CANARY_MIN_SAMPLES
         and c["span"] >= CANARY_MIN_SPAN
@@ -354,6 +362,7 @@ def run_clean(
     if psi is not None:
         canary_ok = canary_ok and (
             psi["n"] >= PSI_MIN_SAMPLES
+            and psi["n_unavailable"] == 0
             and psi["span"] >= PSI_MIN_SPAN
             and psi["io_full_mean"] <= PSI_IO_FULL_MEAN_MAX
             and psi["mem_full_mean"] <= PSI_MEM_FULL_MEAN_MAX
